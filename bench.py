@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness (driver contract): run every registered query at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and print per-query timings as JSON.
+(default: the host's core count, session.default_parallelism) and print
+per-query timings as JSON.
 
 Each query is forced end-to-end with the `noop` sink (materializes every
 output column on the executors, no driver collect) so timings reflect the
@@ -147,25 +148,26 @@ def build_output_lines(
         compact["c_t"] = canary_t
         compact["c_slot"] = canary_slot
     line = json.dumps(compact, separators=(",", ":"))
-    # defensive shedding, least-essential first: canary series, slowest,
-    # then t_alpha — totals always survive
-    for key in ("c_slot", "c_t", "slowest", "t_alpha"):
+    # defensive shedding, least-essential first: the canary series (c_t
+    # and c_slot only make sense together), slowest, then t_alpha —
+    # totals always survive
+    for keys in (("c_t", "c_slot"), ("slowest",), ("t_alpha",)):
         if len(line) <= FINAL_LINE_BUDGET:
             break
-        compact.pop(key, None)
+        for key in keys:
+            compact.pop(key, None)
         line = json.dumps(compact, separators=(",", ":"))
     return [full, line]
 
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")  # get_spark sizes local[N] from this
     try:
         sf = float(Path(sf_dir).name.removeprefix("sf"))
     except ValueError:
         sf = -1.0
 
-    from prueba_tecnica_http_client_etl_spark.session import get_spark
+    from prueba_tecnica_http_client_etl_spark.session import default_parallelism, get_spark
     from prueba_tecnica_http_client_etl_spark import registry
 
     spark = get_spark(f"bench-sf{sf}")
@@ -177,7 +179,7 @@ def main() -> int:
     # session pays ~2.5s of worker spawn + Arrow init that would otherwise
     # be billed to whichever Arrow query happens to run first
     # (multimodal_frame_sample, alphabetically). One worker per core.
-    n_workers = int(os.environ["SPARK_GRAFT_CPUS"])
+    n_workers = default_parallelism()
     spark.range(n_workers * 100).repartition(n_workers).mapInPandas(
         lambda batches: batches, "id long"
     ).write.format("noop").mode("overwrite").save()

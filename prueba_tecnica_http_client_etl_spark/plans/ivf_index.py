@@ -5,8 +5,10 @@ sibling of plans/lsh_index.py.
 a self-contained registry query, re-assigns the whole corpus to cells on
 every call. A production vector store assigns ONCE at ingest and amortizes:
 
-    build_ivf_index(quantized_corpus, prefix="vecs")   # once / on re-train
+    build_ivf_index(quantized_corpus, prefix="vecs")      # once / on re-train
     probe_ivf_index(spark, query_vectors, prefix="vecs")  # per query batch
+    append_to_ivf_index(new_vectors, prefix="vecs")       # ingest ACCEPT
+    compact_ivf_index(spark, prefix="vecs")               # periodic heal
 
 Two catalog tables:
 
@@ -23,8 +25,9 @@ matters), and per-batch probe cost is |batch| x NPROBE cells — independent
 of corpus size. Probe results are bit-identical to ann_ivf_topk on the
 same corpus (tests/test_ivf_index.py asserts row equality).
 
-Reference: no counterpart (/root/reference has no vectors, SURVEY.md
-§2.6); completes the §2.8 similarity tier's index lifecycle.
+Reference: no counterpart (SURVEY.md §2.6); completes the §2.8
+similarity tier's index lifecycle. The catalog-table mechanics live in
+plans/index_tables.py.
 """
 
 from __future__ import annotations
@@ -40,8 +43,10 @@ from ..operators.similarity import (
     TOPK,
     _SPARK_PAIR_DOT,
 )
-from .layout import write_bucketed
-from .lsh_index import _clear_orphaned_location
+from .index_tables import IndexTables, occupancy
+
+TABLES = IndexTables(cents=None, cells="cell")
+
 
 def _cos_to_cent() -> F.Column:
     # built lazily: F.expr needs an active SparkContext, and this module
@@ -69,18 +74,16 @@ def build_ivf_index(
     (probe_ivf_index's `label=` — the payload-filter-inside-cell-visit
     shape production vector stores run for tenant/class predicates)."""
     spark = emb.sparkSession
-    for suffix in ("cents", "cells"):
-        _clear_orphaned_location(spark, f"{prefix}_{suffix}")
+    TABLES.clear_orphans(spark, prefix)
     if cents is None:
         cents = _strided_seeds(emb).select(
             F.col("vec_id").alias("cent_id"),
             F.col("q").alias("qc"),
             F.col("nrm").alias("nc"),
         )
-    cents.write.mode("overwrite").format("parquet").saveAsTable(f"{prefix}_cents")
-    cents_t = emb.sparkSession.table(f"{prefix}_cents")
-    assigned = _assign_cells(emb, cents_t, carry_cols)
-    write_bucketed(assigned, f"{prefix}_cells", bucket_cols=["cell"], n_buckets=n_buckets)
+    TABLES.write(cents, prefix, "cents", n_buckets)
+    assigned = _assign_cells(emb, spark.table(f"{prefix}_cents"), carry_cols)
+    TABLES.write(assigned, prefix, "cells", n_buckets)
 
 
 def _assign_cells(emb: DataFrame, cents_t: DataFrame, carry_cols: tuple[str, ...]) -> DataFrame:
@@ -122,17 +125,11 @@ def append_to_ivf_index(
     per-vector function of the frozen centroids, so append-grown and
     rebuilt indexes are interchangeable until the next re-train (cell
     balance after drift is the re-train/compaction trigger, exactly
-    like the LSH cap). The bucket spec is read from the catalog and a
-    missing cents OR cells table fails loudly (mode('append') would
-    silently create a parallel cells table nothing probes)."""
-    from .lsh_index import _require_index, _table_n_buckets
-
+    like the LSH cap)."""
     spark = emb.sparkSession
-    _require_index(spark, prefix, ("cents", "cells"))
+    TABLES.require(spark, prefix)
     assigned = _assign_cells(emb, spark.table(f"{prefix}_cents"), carry_cols)
-    assigned.write.mode("append").format("parquet").bucketBy(
-        _table_n_buckets(spark, f"{prefix}_cells"), "cell"
-    ).saveAsTable(f"{prefix}_cells")
+    TABLES.append(assigned, prefix, "cells")
 
 
 def compact_ivf_index(spark: SparkSession, *, prefix: str) -> dict:
@@ -152,53 +149,26 @@ def compact_ivf_index(spark: SparkSession, *, prefix: str) -> dict:
     (append's contract: the quantizer is frozen at ingest, so corpus
     drift shows up as cell imbalance — when max_cell far outgrows
     mean_cell the quantizer has gone stale; re-train and rebuild).
-
-    The bucket spec is read from the catalog; the rewrite goes through
-    layout.replace_table_staged — a DURABLE stage table then a
-    drop+rename swap, never an in-place overwrite staged in checkpoint
-    memory (round-12 ADVICE: a crash or lost block mid-rewrite would
-    destroy the sole copy of the index; a swap interrupted between
-    drop and rename self-heals at the next index operation via
-    _require_index's heal_staged_swap preamble). Returns
-    driver-bounded scalars: {rows_before, rows_after, n_cells,
+    Returns driver-bounded scalars: {rows_before, rows_after, n_cells,
     max_cell, mean_cell}."""
-    from .layout import replace_table_staged
-    from .lsh_index import _require_index, _table_n_buckets
-
-    _require_index(spark, prefix, ("cents", "cells"))
-    table = f"{prefix}_cells"
-    n_buckets = _table_n_buckets(spark, table)
-    rows_before = spark.table(table).count()
-    replace_table_staged(
-        spark.table(table).distinct(), table, bucket_cols=["cell"], n_buckets=n_buckets
-    )
-    stats = (
-        spark.table(table)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.sum("n").alias("rows_after"),
-            F.count(F.lit(1)).alias("n_cells"),
-            F.max("n").alias("max_cell"),
-            F.avg("n").alias("mean_cell"),
-        )
-        .collect()[0]
-    )
+    TABLES.require(spark, prefix)
+    rows_before = spark.table(f"{prefix}_cells").count()
+    TABLES.dedup(spark, prefix, "cells")
+    stats = occupancy(spark.table(f"{prefix}_cells"), "cell")
     return {
         "rows_before": int(rows_before),
-        "rows_after": int(stats["rows_after"]),
-        "n_cells": int(stats["n_cells"]),
-        "max_cell": int(stats["max_cell"]),
-        "mean_cell": float(stats["mean_cell"]),
+        "rows_after": int(stats["rows"]),
+        "n_cells": int(stats["groups"]),
+        "max_cell": int(stats["max"]),
+        "mean_cell": float(stats["mean"]),
     }
 
 
 def _probe_cells_vectorized(queries: DataFrame, cents_t: DataFrame, nprobe: int) -> DataFrame:
     """Query-side quantizer ranking as one numpy matmul per Arrow batch
-    — the `_ivf_assign` pattern applied to the persisted-index probe
-    (round-13 deferral): the broadcast quantizer is <= CENTROID_MAX_K
-    rows by construction, integer dots are exact in float64, and a
-    STABLE argsort on -cos over cent_id-ascending columns reproduces
+    — the `_ivf_assign` pattern applied to the persisted-index probe:
+    the broadcast quantizer is <= CENTROID_MAX_K rows by construction,
+    integer dots are exact in float64, and a STABLE argsort on -cos over cent_id-ascending columns reproduces
     the (cent_cos desc, cent_id) row_number order bit-for-bit (the
     dual-path test in tests/test_ivf_index.py). Zero norms raise — NaN
     cosines order differently across the two physical paths."""
@@ -267,13 +237,7 @@ def probe_ivf_index(
     ann_filtered_topk's join-key pre-filter; pass a wider `nprobe`
     (FILTERED_NPROBE) to pay for the thinner cells — the measured
     recall ladder at FILTERED_NPROBE's definition applies unchanged."""
-    from .lsh_index import _require_index
-
-    # fail loudly on a missing index (and self-heal a compaction swap
-    # that crashed between drop and rename) before reading any table —
-    # without this the IVF probe was the one entry point that stayed
-    # broken after a crashed compact until an append/compact ran
-    _require_index(spark, prefix, ("cents", "cells"))
+    TABLES.require(spark, prefix)
     cents = spark.table(f"{prefix}_cents")
     if vectorized:
         probes = _probe_cells_vectorized(queries, cents, nprobe)

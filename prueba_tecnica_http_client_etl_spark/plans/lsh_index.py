@@ -6,25 +6,30 @@ incremental deduplication.
 rebuilds the corpus-side signatures on every call. A real crawler ingest
 loop builds the index ONCE and amortizes it over every subsequent batch:
 
-    build_lsh_index(corpus_docs, prefix="corpus")     # once / on compaction
+    build_lsh_index(corpus_docs, prefix="corpus")        # once / re-build
     probe_lsh_index(spark, batch_docs, prefix="corpus")  # per batch
+    append_to_lsh_index(novel_docs, prefix="corpus")     # accept novel
+    compact_lsh_index(spark, prefix="corpus")            # periodic heal
 
 Three catalog tables, each bucketed on its probe key so every per-batch
-join reads the index pre-partitioned (no index-side shuffle, ever):
+join reads the index pre-partitioned (no index-side shuffle, ever), plus
+the hot-bucket tombstones:
 
 - `{prefix}_digests` (digest, doc_id)            bucketed by digest
 - `{prefix}_bands`   (doc_id, band_idx, band_hash) bucketed by band_hash
 - `{prefix}_shingles`(doc_id, sh)                bucketed by doc_id
+- `{prefix}_hotdrops`(band_idx, band_hash)       unbucketed, tiny
 
 At 100 TB the index tables are tiny next to the corpus (a 16-byte digest,
 4 band rows, and one shingle-hash set per doc) and per-batch probe cost is
 |batch| x bands lookups — independent of corpus size. Bucket count should
 be sized so one bucket of `{prefix}_shingles` fits executor memory
-(plans/layout.py::write_bucketed discusses the arithmetic).
+(plans/layout.py::write_bucketed gives the arithmetic).
 
-Reference: no counterpart (/root/reference has no duplicate concept and no
-persistence beyond per-run CSV, SURVEY.md §2.6); this is the §2.8 dedup
-tier's index-lifecycle completion.
+Reference: no counterpart (SURVEY.md §2.6); this is the §2.8 dedup
+tier's index lifecycle. The catalog-table mechanics (orphan clearing,
+missing-table guard, bucketed appends, staged-swap rewrites) live in
+plans/index_tables.py.
 """
 
 from __future__ import annotations
@@ -39,41 +44,9 @@ from ..operators.dedup import (
     band_table,
     lsh_hot_buckets,
 )
-from .layout import heal_staged_swap, replace_table_staged, write_bucketed
+from .index_tables import IndexTables
 
-
-def _clear_orphaned_location(spark: SparkSession, name: str) -> None:
-    """If `name` is unknown to the catalog but its managed location exists
-    on disk (a crashed build left files without metadata), remove the
-    orphaned directory — saveAsTable(overwrite) has nothing to overwrite
-    and refuses a non-empty location otherwise. Shared by every
-    build-once index writer (lsh_index, ivf_index).
-
-    Destructive-path guards (round-6 ADVICE): the `{warehouse}/{name}`
-    path is the DEFAULT-database managed location, so (a) the existence
-    check is qualified as `default`.`name` — an unqualified tableExists
-    resolves against the session's CURRENT database, which may be a
-    different table entirely — and (b) the directory is only removed if
-    every entry in it looks like Spark table-build output (parquet parts,
-    _SUCCESS/_temporary/.crc artifacts); anything else present means the
-    path is not an aborted build of ours, and the write is left to fail
-    loudly on the non-empty location instead."""
-    if spark.catalog.tableExists(f"`default`.`{name}`"):
-        return
-    import os
-    import re
-    import shutil
-    from urllib.parse import urlparse
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    loc = os.path.join(wh, name)
-    if not os.path.isdir(loc):
-        return
-    build_artifact = re.compile(
-        r"^(_SUCCESS|_temporary|_committed.*|_started.*|part-.*|\..*\.crc|\.part-.*)$"
-    )
-    if all(build_artifact.match(e) for e in os.listdir(loc)):
-        shutil.rmtree(loc, ignore_errors=True)
+TABLES = IndexTables(digests="digest", bands="band_hash", shingles="doc_id", hotdrops=None)
 
 
 def _prepped(docs: DataFrame) -> DataFrame:
@@ -82,111 +55,41 @@ def _prepped(docs: DataFrame) -> DataFrame:
 
 
 def build_lsh_index(docs: DataFrame, *, prefix: str, n_buckets: int = 8) -> None:
-    """Materialize the three index tables for `docs` (doc_id, norm, sh).
+    """Materialize the index tables for `docs` (doc_id, norm, sh).
 
     One pass computes digests and signatures; each table is written
     bucketed on the key its probe joins on. Rebuild-in-place is safe:
-    saveAsTable(overwrite) swaps atomically at the catalog level, and an
-    ORPHANED location (a crashed build left files but no catalog entry,
-    so overwrite has nothing to overwrite and refuses the non-empty dir)
-    is detected and cleared first."""
+    saveAsTable(overwrite) swaps at the catalog level, and an orphaned
+    location left by a crashed build is cleared first.
+
+    The hot-bucket cap applies at build time: a band bucket larger than
+    LSH_MAX_BUCKET is dropped, so no probe fans out to a boilerplate
+    bucket's whole membership (exact dups there are still caught by the
+    digest tier; dedup_incremental applies the same cap). The dropped
+    keys are TOMBSTONED in `{prefix}_hotdrops`, one row per
+    (band_idx, band_hash): appends anti-join it, so a bucket capped away
+    at build stays away and append-grown indexes keep agreeing with a
+    one-shot capped rebuild."""
     spark = docs.sparkSession
-    for suffix in ("digests", "bands", "shingles", "hotdrops"):
-        _clear_orphaned_location(spark, f"{prefix}_{suffix}")
+    TABLES.clear_orphans(spark, prefix)
     d = _prepped(docs).persist()
     bands = None
     try:
-        write_bucketed(
-            d.select("digest", "doc_id"),
-            f"{prefix}_digests",
-            bucket_cols=["digest"],
-            n_buckets=n_buckets,
-        )
-        # hot-bucket cap at BUILD time (round-7 review finding): a
-        # boilerplate band bucket holding a large slice of the index
-        # would make every colliding probe fan out to its whole
-        # membership, breaking the per-batch-cost-independent-of-corpus
-        # contract. Dropping it here (same LSH_MAX_BUCKET + rationale as
-        # the batch path) keeps every future probe bounded; exact dups
-        # in such buckets are still caught by the digest tier, and the
-        # inline index in dedup_incremental applies the identical cap so
-        # probe verdicts keep matching its oracle.
-        # bands feeds two branches (the hot-bucket aggregate and the
-        # anti-join write): persist it or the 16-minhash signature build
-        # + band explode recomputes once per branch (round-7 review
-        # finding class, flagged here by the round-8 ADVICE)
+        TABLES.write(d.select("digest", "doc_id"), prefix, "digests", n_buckets)
+        # bands feeds the hot-bucket aggregate and the anti-join write:
+        # persisted so the signature build + band explode runs once
         bands = band_table(_minhash_signatures(d)).persist()
         hot = lsh_hot_buckets(bands, max_bucket_size=LSH_MAX_BUCKET)
-        # TOMBSTONE the dropped keys: a bucket capped away at build must
-        # STAY away — later appends anti-join this table, so an append
-        # re-populating a once-hot bucket below the cap cannot resurrect
-        # it (that would diverge from a one-shot capped rebuild, whose
-        # hotness is computed over the full membership). Tiny: one row
-        # per dropped (band_idx, band_hash).
-        hot.select("band_idx", "band_hash").write.mode("overwrite").format(
-            "parquet"
-        ).saveAsTable(f"{prefix}_hotdrops")
-        write_bucketed(
-            bands.join(
-                F.broadcast(spark.table(f"{prefix}_hotdrops")),
-                ["band_idx", "band_hash"],
-                "left_anti",
-            ),
-            f"{prefix}_bands",
-            bucket_cols=["band_hash"],
-            n_buckets=n_buckets,
+        TABLES.write(hot.select("band_idx", "band_hash"), prefix, "hotdrops", n_buckets)
+        kept = bands.join(
+            F.broadcast(spark.table(f"{prefix}_hotdrops")), ["band_idx", "band_hash"], "left_anti"
         )
-        write_bucketed(
-            d.select("doc_id", "sh"),
-            f"{prefix}_shingles",
-            bucket_cols=["doc_id"],
-            n_buckets=n_buckets,
-        )
+        TABLES.write(kept, prefix, "bands", n_buckets)
+        TABLES.write(d.select("doc_id", "sh"), prefix, "shingles", n_buckets)
     finally:
         if bands is not None:
             bands.unpersist()
         d.unpersist()
-
-
-def _table_n_buckets(spark: SparkSession, table: str) -> int:
-    """Bucket count of a catalog table, read from DESCRIBE FORMATTED —
-    appends and compaction must reuse the spec the table was BUILT
-    with (a caller-supplied count that disagrees would either fail the
-    append or silently rebucket on overwrite)."""
-    for row in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
-        if row.col_name.strip() == "Num Buckets":
-            return int(row.data_type.strip())
-    raise ValueError(f"{table} is not bucketed — not an index table")
-
-
-def _require_index(spark: SparkSession, prefix: str, suffixes: tuple[str, ...]) -> None:
-    """Fail loudly when the index doesn't exist: mode('append') would
-    silently CREATE missing tables, so a typo'd or never-built prefix
-    would swallow the batch into a parallel index nothing ever probes.
-
-    UNQUALIFIED tableExists on purpose (round-12 review): the guarded
-    operations (spark.table / saveAsTable) resolve against the
-    session's CURRENT database, so the guard must resolve the same way
-    — a `default`-qualified check would disagree with them whenever a
-    caller has switched databases. (_clear_orphaned_location is the
-    opposite case: it inspects the default-DB filesystem PATH, so its
-    qualified check is the one that matches what it touches.)
-
-    A missing table first gets one heal attempt (heal_staged_swap): a
-    compaction that crashed between its drop and rename steps leaves
-    the complete rewrite under `{table}__compact_stage` — renaming it
-    into place is recovery, not error, and makes every index entry
-    point (probe, append, compact) self-healing."""
-    missing = [
-        s
-        for s in suffixes
-        if not spark.catalog.tableExists(f"`{prefix}_{s}`")
-        and not heal_staged_swap(spark, f"{prefix}_{s}")
-    ]
-    if missing:
-        raise ValueError(
-            f"index '{prefix}' is missing tables {missing} — build the index first"
-        )
 
 
 def append_to_lsh_index(batch: DataFrame, *, prefix: str) -> None:
@@ -194,19 +97,12 @@ def append_to_lsh_index(batch: DataFrame, *, prefix: str) -> None:
     between probe and the next batch: the crawler probes arrivals,
     keeps the novel ones, and appends their (digest, bands, shingles)
     so every LATER batch is deduplicated against them too. Signatures
-    are derived here once — the sign-once-at-ingest event the round-12
-    probe-memo adjudication describes — and never again (the stored
-    band rows ARE the signature state).
+    are derived here once; the stored band rows ARE the signature state.
 
-    Appends write additional bucketed files into the existing catalog
-    tables (bucket spec read FROM the catalog, so pruning and the
-    shuffle-free probe joins keep holding); a missing table fails
-    loudly instead of mode('append') silently creating a parallel
-    index nothing probes. New band rows anti-join the build-time
-    tombstones ({prefix}_hotdrops): a bucket capped away at build
-    stays away, so append-grown and one-shot-rebuilt indexes keep
-    agreeing. Per-append cost is |batch| x bands rows, independent of
-    index size — no rebuild, no read-modify-write.
+    New band rows anti-join the build-time tombstones ({prefix}_hotdrops),
+    so a bucket capped away at build stays away. Per-append cost is
+    |batch| x bands rows, independent of index size — no rebuild, no
+    read-modify-write.
 
     Delivery is at-least-once, NOT atomic: three table appends with no
     transaction, so a mid-append failure + retry can duplicate rows.
@@ -222,71 +118,48 @@ def append_to_lsh_index(batch: DataFrame, *, prefix: str) -> None:
     corpus + B in one shot, up to buckets B pushes OVER the cap —
     those appear hot only to the one-shot build until
     compact_lsh_index runs (re-evaluating the cap per append would
-    need the appended buckets' full membership). The
-    build/append/compact split is the one production LSH services
-    run."""
+    need the appended buckets' full membership)."""
     spark = batch.sparkSession
-    _require_index(spark, prefix, ("digests", "bands", "shingles", "hotdrops"))
+    TABLES.require(spark, prefix)
     d = _prepped(batch).persist()
     try:
-        d.select("digest", "doc_id").write.mode("append").format("parquet").bucketBy(
-            _table_n_buckets(spark, f"{prefix}_digests"), "digest"
-        ).saveAsTable(f"{prefix}_digests")
+        TABLES.append(d.select("digest", "doc_id"), prefix, "digests")
         new_bands = band_table(_minhash_signatures(d)).join(
             F.broadcast(spark.table(f"{prefix}_hotdrops")),
             ["band_idx", "band_hash"],
             "left_anti",
         )
-        new_bands.write.mode("append").format("parquet").bucketBy(
-            _table_n_buckets(spark, f"{prefix}_bands"), "band_hash"
-        ).saveAsTable(f"{prefix}_bands")
-        d.select("doc_id", "sh").write.mode("append").format("parquet").bucketBy(
-            _table_n_buckets(spark, f"{prefix}_shingles"), "doc_id"
-        ).saveAsTable(f"{prefix}_shingles")
+        TABLES.append(new_bands, prefix, "bands")
+        TABLES.append(d.select("doc_id", "sh"), prefix, "shingles")
     finally:
         d.unpersist()
 
 
 def compact_lsh_index(spark: SparkSession, *, prefix: str) -> int:
     """Periodic index maintenance — one scan of the index state, never
-    of the corpus: (1) DEDUP all three tables (heals duplicate rows
-    from retried at-least-once appends, which would otherwise inflate
-    n_near_candidates and bucket_size counts — a genuine 5-member
-    bucket duplicated once would read 10 > cap and be wrongly
-    dropped); (2) re-apply the hot-bucket cap over the deduped band
-    table and add the newly-dropped keys to the {prefix}_hotdrops
+    of the corpus: (1) DEDUP the digest, shingle and band tables (heals
+    duplicate rows from retried at-least-once appends, which would
+    otherwise inflate n_near_candidates and bucket_size counts — a
+    genuine 5-member bucket duplicated once would read 10 > cap and be
+    wrongly dropped); (2) re-apply the hot-bucket cap over the deduped
+    band table and add the newly-dropped keys to the {prefix}_hotdrops
     tombstones, so buckets grown past LSH_MAX_BUCKET by appends stop
-    fanning out probes AND stay dropped under future appends. Bucket
-    specs are read from the catalog. Returns the number of newly
-    tombstoned hot buckets.
+    fanning out probes AND stay dropped under future appends. Returns
+    the number of newly tombstoned hot buckets.
 
-    The collect is bounded, documented driver state: hot buckets are
+    The collect is bounded driver state: hot buckets are
     (band_idx, band_hash) keys whose membership exceeds the cap, so
-    their count is at most |band rows| / LSH_MAX_BUCKET and in
-    practice the handful of boilerplate clusters — the same
-    driver-bounded class as the hot-bucket broadcast in the batch
-    dedup path.
+    their count is at most |band rows| / LSH_MAX_BUCKET.
 
-    Every rewrite goes through layout.replace_table_staged — a DURABLE
-    stage table then a drop+rename swap — never through an in-place
-    overwrite staged in checkpoint memory (round-12 ADVICE: a crash or
-    lost block mid-rewrite would destroy the sole copy of the index).
-    A compaction interrupted between drop and rename self-heals at the
-    next index operation (_require_index runs heal_staged_swap).
     Rewrite order is deliberate: hotdrops BEFORE bands — if the run
     dies between them, the bands table still holds the hot rows, so
-    the re-run re-detects them (the tombstone rewrite is idempotent:
-    old union new, distinct); bands-first would lose the hot keys'
-    only evidence before their tombstones landed."""
-    _require_index(spark, prefix, ("digests", "bands", "shingles", "hotdrops"))
-
-    def rewrite(table: str, df: DataFrame, bucket_col: str) -> None:
-        replace_table_staged(
-            df, table, bucket_cols=[bucket_col], n_buckets=_table_n_buckets(spark, table)
-        )
-
-    rewrite(f"{prefix}_digests", spark.table(f"{prefix}_digests").distinct(), "digest")
-    rewrite(f"{prefix}_shingles", spark.table(f"{prefix}_shingles").distinct(), "doc_id")
+    the re-run re-detects them; bands-first would lose the hot keys'
+    only evidence before their tombstones landed. The tombstones are
+    rewritten as (old union new).distinct(), so a retried compaction
+    never grows them."""
+    TABLES.require(spark, prefix)
+    TABLES.dedup(spark, prefix, "digests")
+    TABLES.dedup(spark, prefix, "shingles")
 
     bands = spark.table(f"{prefix}_bands").distinct()
     hot = lsh_hot_buckets(bands, max_bucket_size=LSH_MAX_BUCKET).collect()
@@ -295,11 +168,8 @@ def compact_lsh_index(spark: SparkSession, *, prefix: str) -> int:
         hot_df = spark.createDataFrame(hot).select("band_idx", "band_hash")
         bands = bands.join(F.broadcast(hot_df), ["band_idx", "band_hash"], "left_anti")
         drops = drops.unionByName(hot_df)
-    # hotdrops is rewritten distinct every compaction (round-12 ADVICE:
-    # the old mode('append') re-tombstoned the same keys on a retried
-    # compaction, growing the broadcast anti-join side without bound)
-    replace_table_staged(drops.distinct(), f"{prefix}_hotdrops")
-    rewrite(f"{prefix}_bands", bands, "band_hash")
+    TABLES.rewrite(drops.distinct(), prefix, "hotdrops")
+    TABLES.rewrite(bands, prefix, "bands")
     return len(hot)
 
 
@@ -313,8 +183,7 @@ def probe_lsh_index(
 
     `ordered=False` skips the final doc_id sort — the streaming runner
     (streaming/index_probe_stream.py) writes each micro-batch to parquet,
-    which discards ordering, so the per-batch global sort was pure tax
-    (round-12 verdict item 4). The verdict set is identical either way.
+    which discards ordering. The verdict set is identical either way.
 
     Only the batch side shuffles: the digest semi-probe, the band
     candidate join, and the shingle verify join each hit a table bucketed
@@ -323,9 +192,7 @@ def probe_lsh_index(
     decision."""
     from ..functions.cachepool import managed_persist
 
-    # fail loudly on a missing index (and self-heal a compaction swap
-    # that crashed between drop and rename) before reading any table
-    _require_index(spark, prefix, ("digests", "bands", "shingles"))
+    TABLES.require(spark, prefix, "digests", "bands", "shingles")
     inc = managed_persist(_prepped(batch))
 
     digests = spark.table(f"{prefix}_digests")

@@ -6,9 +6,10 @@ artifact rebuilt once per Spark application; a production ingest loop
 persists the banded signatures ONCE and amortizes them across every
 session and every arriving batch:
 
-    build_phash_index(sigs, prefix="img")        # once / on compaction
-    probe_phash_index(spark, batch_sigs, prefix="img")   # per batch
-    append_to_phash_index(novel_sigs, prefix="img")      # accept novel
+    build_phash_index(sigs, prefix="img")               # once / re-build
+    probe_phash_index(spark, batch_sigs, prefix="img")  # per batch
+    append_to_phash_index(novel_sigs, prefix="img")     # accept novel
+    compact_phash_index(spark, prefix="img")            # periodic heal
 
 ONE catalog table per index, bucketed on the probe key so every
 per-batch join reads the index pre-partitioned (no index-side shuffle,
@@ -30,10 +31,8 @@ the index's black frames rather than silently reading 'novel'. At
 payloads — and per-batch probe cost is |batch| x _PH_BANDS bucketed
 lookups, independent of corpus size.
 
-Reference: no counterpart (/root/reference has no multimodal or
-persistence concept, SURVEY.md §2.8); completes the perceptual tier to
-the same index-lifecycle depth as MinHash-LSH (plans/lsh_index.py) and
-IVF (plans/ivf_index.py).
+Reference: no counterpart (SURVEY.md §2.8 multimodal tier). The
+catalog-table mechanics live in plans/index_tables.py.
 """
 
 from __future__ import annotations
@@ -42,23 +41,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import _PH_HAMMING_K, _phash_bands
-from .layout import write_bucketed
-from .lsh_index import _clear_orphaned_location, _require_index, _table_n_buckets
+from .index_tables import IndexTables, occupancy
+
+TABLES = IndexTables(pbands="bv")
 
 
 def build_phash_index(sigs: DataFrame, *, prefix: str, n_buckets: int = 8) -> None:
     """Materialize the banded signature table for `sigs` (doc_id, phash).
     Rebuild-in-place is safe: saveAsTable(overwrite) swaps atomically at
     the catalog level, and an orphaned location from a crashed build is
-    cleared first (the shared build-once-writer guard)."""
-    spark = sigs.sparkSession
-    _clear_orphaned_location(spark, f"{prefix}_pbands")
-    write_bucketed(
-        _phash_bands(sigs),
-        f"{prefix}_pbands",
-        bucket_cols=["bv"],
-        n_buckets=n_buckets,
-    )
+    cleared first."""
+    TABLES.clear_orphans(sigs.sparkSession, prefix)
+    TABLES.write(_phash_bands(sigs), prefix, "pbands", n_buckets)
 
 
 def append_to_phash_index(sigs: DataFrame, *, prefix: str) -> None:
@@ -66,9 +60,7 @@ def append_to_phash_index(sigs: DataFrame, *, prefix: str) -> None:
     between probe and the next batch (keep the novel arrivals, append
     their band rows so every LATER batch probes against them too).
     Bands are derived here once; the stored rows ARE the signature
-    state. The bucket spec is read FROM the catalog so pruning and the
-    shuffle-free probe join keep holding; a missing table fails loudly
-    instead of mode('append') silently creating a parallel index.
+    state.
 
     Delivery is at-least-once, NOT atomic (one table, one append, but a
     retry can duplicate rows). Duplicates never flip a verdict — the
@@ -79,11 +71,8 @@ def append_to_phash_index(sigs: DataFrame, *, prefix: str) -> None:
     append(B) is byte-identical to probing an index BUILT from
     corpus + B in one shot — with no build-time cap there is no
     deferred-hotness case to carve out."""
-    spark = sigs.sparkSession
-    _require_index(spark, prefix, ("pbands",))
-    _phash_bands(sigs).write.mode("append").format("parquet").bucketBy(
-        _table_n_buckets(spark, f"{prefix}_pbands"), "bv"
-    ).saveAsTable(f"{prefix}_pbands")
+    TABLES.require(sigs.sparkSession, prefix)
+    TABLES.append(_phash_bands(sigs), prefix, "pbands")
 
 
 def probe_phash_index(
@@ -97,10 +86,11 @@ def probe_phash_index(
     verdict, n_band_candidates, min_hamming) — the probe-vs-stream
     equality is the contract test. Only the batch side shuffles: the
     candidate join hits the table bucketed on bv."""
+    TABLES.require(spark, prefix)
     pb = _phash_bands(sigs).select(
         "doc_id", F.col("phash").alias("pp"), "band", "bv"
     )
-    ib = spark_table_bands(spark, prefix).select(
+    ib = spark.table(f"{prefix}_pbands").select(
         F.col("doc_id").alias("ix_id"), F.col("phash").alias("pi"), "band", "bv"
     )
     cand = pb.join(ib, ["band", "bv"]).select("doc_id", "ix_id", "pp", "pi").distinct()
@@ -127,13 +117,6 @@ def probe_phash_index(
     return out.orderBy("doc_id") if ordered else out
 
 
-def spark_table_bands(spark: SparkSession, prefix: str) -> DataFrame:
-    """The index band table, with the loud-failure / self-heal preamble
-    every entry point shares."""
-    _require_index(spark, prefix, ("pbands",))
-    return spark.table(f"{prefix}_pbands")
-
-
 def compact_phash_index(spark: SparkSession, *, prefix: str) -> dict:
     """Periodic maintenance — one scan of the band table, never of the
     payloads (the perceptual sibling of compact_lsh_index /
@@ -142,7 +125,7 @@ def compact_phash_index(spark: SparkSession, *, prefix: str) -> dict:
     function, so a retried batch reproduces its rows byte-identically
     and distinct is exact; verdicts were never at risk — the probe's
     candidate set is DISTINCT — only storage and probe-join input
-    volume). The rewrite goes through the staged swap, never in-place.
+    volume).
 
     Also reports the band-bucket occupancy scalars that are this
     index's health monitor: probes cost bucket membership per arriving
@@ -151,31 +134,14 @@ def compact_phash_index(spark: SparkSession, *, prefix: str) -> dict:
     the deliberate UNVALVED probe design makes this the number to
     watch. Returns {rows_before, rows_after, n_buckets, max_bucket,
     mean_bucket}."""
-    from .layout import replace_table_staged
-
-    _require_index(spark, prefix, ("pbands",))
-    table = f"{prefix}_pbands"
-    n_buckets = _table_n_buckets(spark, table)
-    rows_before = spark.table(table).count()
-    replace_table_staged(
-        spark.table(table).distinct(), table, bucket_cols=["bv"], n_buckets=n_buckets
-    )
-    stats = (
-        spark.table(table)
-        .groupBy("band", "bv")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.sum("n").alias("rows_after"),
-            F.count(F.lit(1)).alias("n_occupied"),
-            F.max("n").alias("max_bucket"),
-            F.avg("n").alias("mean_bucket"),
-        )
-        .collect()[0]
-    )
+    TABLES.require(spark, prefix)
+    rows_before = spark.table(f"{prefix}_pbands").count()
+    TABLES.dedup(spark, prefix, "pbands")
+    stats = occupancy(spark.table(f"{prefix}_pbands"), "band", "bv")
     return {
         "rows_before": int(rows_before),
-        "rows_after": int(stats["rows_after"]),
-        "n_buckets": int(stats["n_occupied"]),
-        "max_bucket": int(stats["max_bucket"]),
-        "mean_bucket": float(stats["mean_bucket"]),
+        "rows_after": int(stats["rows"]),
+        "n_buckets": int(stats["groups"]),
+        "max_bucket": int(stats["max"]),
+        "mean_bucket": float(stats["mean"]),
     }

@@ -1,5 +1,5 @@
 """Persisted IVF-PQ code-index lifecycle — the durable form of the
-similarity tier's cheapest serving representation (judge r17 item 3).
+similarity tier's cheapest serving representation.
 
 `plans/ivf_index.py` persists *full vectors* in its inverted lists; the
 engine's own 100 TB argument (operators/similarity.py::ann_ivfpq_topk)
@@ -39,18 +39,17 @@ the probe reuses the operators' own probe/scan kernels
 (_ivfpq_probe_cells / _ivfpq_score_cells), so the engine-wide
 bit-determinism argument transfers wholesale.
 
-Failure-mode hardening (the video-index lessons applied from day one):
-appends write codes FIRST, vecs second — a crash between the two
-leaves vectors that ADC-score correctly but raise loudly (raise_error)
-if they reach a re-rank fetch, never a silent wrong answer; a RETRIED
-append duplicates rows in both tables, which the probe does NOT mask
-(a duplicated code row occupies two top-k slots and evicts a genuine
-neighbor — the IVF-index lesson) — compact_pq_index is the heal, and
-its full-row distinct is exact because encode under frozen artifacts
-is a pure per-vector function.
+Failure modes: appends write codes FIRST, vecs second — a crash between
+the two leaves vectors that ADC-score correctly but raise loudly
+(raise_error) if they reach a re-rank fetch, never a silent wrong
+answer; a RETRIED append duplicates rows in both tables, which the probe
+does NOT mask (a duplicated code row occupies two top-k slots and evicts
+a genuine neighbor) — compact_pq_index is the heal, and its full-row
+distinct is exact because encode under frozen artifacts is a pure
+per-vector function.
 
-Reference: no counterpart (/root/reference has no vectors; SURVEY.md
-§2.8 similarity tier).
+Reference: no counterpart (SURVEY.md §2.8 similarity tier). The
+catalog-table mechanics live in plans/index_tables.py.
 """
 
 from __future__ import annotations
@@ -73,10 +72,9 @@ from ..operators.similarity import (
     _pq_encode,
     _trained_centroids,
 )
-from .layout import write_bucketed
-from .lsh_index import _clear_orphaned_location, _require_index, _table_n_buckets
+from .index_tables import IndexTables, occupancy
 
-_TABLES = ("cents", "codebook", "codes", "vecs")
+TABLES = IndexTables(cents=None, codebook=None, codes="cent_id", vecs="vec_id")
 
 _CODE_ARR_AGG = (
     "transform(array_sort(collect_list(struct(sub, code_id))), p -> p.code_id)"
@@ -124,33 +122,18 @@ def build_pq_index(
     FROZEN artifacts (the append==rebuild contract and the re-train
     lifecycle both need it)."""
     spark = emb.sparkSession
-    for suffix in _TABLES:
-        _clear_orphaned_location(spark, f"{prefix}_{suffix}")
+    TABLES.clear_orphans(spark, prefix)
     emb = managed_persist(emb.select("vec_id", "q", "nrm"))
     if cents is None:
         cents = _trained_centroids(emb)
-    cents.select("cent_id", "qc").write.mode("overwrite").format("parquet").saveAsTable(
-        f"{prefix}_cents"
-    )
+    TABLES.write(cents.select("cent_id", "qc"), prefix, "cents", n_buckets)
     cents_t = spark.table(f"{prefix}_cents")
     if codebook is None:
         codebook = _pq_codebook(_residuals(emb, cents_t))
-    codebook.select("sub", "code_id", "cv", "cself").write.mode("overwrite").format(
-        "parquet"
-    ).saveAsTable(f"{prefix}_codebook")
+    TABLES.write(codebook.select("sub", "code_id", "cv", "cself"), prefix, "codebook", n_buckets)
     cb_t = spark.table(f"{prefix}_codebook")
-    write_bucketed(
-        _encode_rows(emb, cents_t, cb_t),
-        f"{prefix}_codes",
-        bucket_cols=["cent_id"],
-        n_buckets=n_buckets,
-    )
-    write_bucketed(
-        emb.select("vec_id", "q", "nrm"),
-        f"{prefix}_vecs",
-        bucket_cols=["vec_id"],
-        n_buckets=n_buckets,
-    )
+    TABLES.write(_encode_rows(emb, cents_t, cb_t), prefix, "codes", n_buckets)
+    TABLES.write(emb.select("vec_id", "q", "nrm"), prefix, "vecs", n_buckets)
 
 
 def append_to_pq_index(emb: DataFrame, *, prefix: str) -> None:
@@ -171,17 +154,13 @@ def append_to_pq_index(emb: DataFrame, *, prefix: str) -> None:
     here (a duplicated code row occupies two top-k slots and evicts a
     genuine neighbor) and compact_pq_index is the heal."""
     spark = emb.sparkSession
-    _require_index(spark, prefix, _TABLES)
+    TABLES.require(spark, prefix)
     emb = managed_persist(emb.select("vec_id", "q", "nrm"))
     rows = _encode_rows(
         emb, spark.table(f"{prefix}_cents"), spark.table(f"{prefix}_codebook")
     )
-    rows.write.mode("append").format("parquet").bucketBy(
-        _table_n_buckets(spark, f"{prefix}_codes"), "cent_id"
-    ).saveAsTable(f"{prefix}_codes")
-    emb.select("vec_id", "q", "nrm").write.mode("append").format("parquet").bucketBy(
-        _table_n_buckets(spark, f"{prefix}_vecs"), "vec_id"
-    ).saveAsTable(f"{prefix}_vecs")
+    TABLES.append(rows, prefix, "codes")
+    TABLES.append(emb.select("vec_id", "q", "nrm"), prefix, "vecs")
 
 
 def compact_pq_index(spark: SparkSession, *, prefix: str) -> dict:
@@ -191,35 +170,19 @@ def compact_pq_index(spark: SparkSession, *, prefix: str) -> dict:
     retried batch reproduces its rows byte-identically and distinct is
     exact), staged-swap rewrite (never in-place), and the cell-balance
     scalars that trigger a re-train — under a frozen quantizer, corpus
-    drift shows up as cell imbalance."""
-    from .layout import replace_table_staged
-
-    _require_index(spark, prefix, _TABLES)
+    drift shows up as cell imbalance. Returns {codes_before, codes_after,
+    vecs_before, vecs_after, n_cells, max_cell, mean_cell}."""
+    TABLES.require(spark, prefix)
     out = {}
-    for table, bucket_col in ((f"{prefix}_codes", "cent_id"), (f"{prefix}_vecs", "vec_id")):
-        n_buckets = _table_n_buckets(spark, table)
-        before = spark.table(table).count()
-        replace_table_staged(
-            spark.table(table).distinct(), table, bucket_cols=[bucket_col], n_buckets=n_buckets
-        )
-        key = table.rsplit("_", 1)[1]
-        out[f"{key}_before"] = int(before)
-        out[f"{key}_after"] = int(spark.table(table).count())
-    stats = (
-        spark.table(f"{prefix}_codes")
-        .groupBy("cent_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            F.max("n").alias("max_cell"),
-            F.avg("n").alias("mean_cell"),
-        )
-        .collect()[0]
-    )
+    for suffix in ("codes", "vecs"):
+        out[f"{suffix}_before"] = int(spark.table(f"{prefix}_{suffix}").count())
+        TABLES.dedup(spark, prefix, suffix)
+        out[f"{suffix}_after"] = int(spark.table(f"{prefix}_{suffix}").count())
+    stats = occupancy(spark.table(f"{prefix}_codes"), "cent_id")
     out.update(
-        n_cells=int(stats["n_cells"]),
-        max_cell=int(stats["max_cell"]),
-        mean_cell=float(stats["mean_cell"]),
+        n_cells=int(stats["groups"]),
+        max_cell=int(stats["max"]),
+        mean_cell=float(stats["mean"]),
     )
     return out
 
@@ -231,14 +194,12 @@ def collect_pq_probe_state(spark: SparkSession, *, prefix: str) -> tuple:
     is frozen by contract between re-trains (build/append never touch
     cents/codebook), so a caller that probes repeatedly (the streaming
     ANN probe's per-micro-batch loop) can pay the two collect jobs and
-    four catalog round-trips once instead of per batch (round-18 verdict
-    item 1: per-batch re-collection was the suite's one perf weak).
+    four catalog round-trips once instead of per batch.
 
     The returned tuple carries `prefix` so probe_pq_index can assert a
     caller never pairs one index's frozen state with another index's
-    codes (round-19 ADVICE: a mismatched (prefix, _frozen) pair would
-    silently score wrong neighbors)."""
-    _require_index(spark, prefix, _TABLES)
+    codes (a mismatched pair would silently score wrong neighbors)."""
+    TABLES.require(spark, prefix)
     c_rows = spark.table(f"{prefix}_cents").orderBy("cent_id").collect()
     cb_arrays = _collect_codebook(spark.table(f"{prefix}_codebook"))
     return prefix, c_rows, cb_arrays
@@ -339,7 +300,7 @@ def probe_pq_index(
     # The torn-append guard lives in a FILTER, not a projection: a
     # raise_error inside a projected expression over an outer join's
     # null-padded row is evaluated (or not) depending on the physical
-    # join AQE picks — measured both ways on this build — whereas a
+    # join AQE picks, whereas a
     # filter must evaluate its predicate for every row. The left-side
     # disjunct (query_id, never null post-inner-join) keeps
     # EliminateOuterJoin from reading the predicate as null-filtering

@@ -3,9 +3,10 @@ of the frozen state the video containment probe stream reads, completing
 index-lifecycle coverage for all three perceptual modalities (image /
 audio: plans/phash_index.py; video: this module).
 
-    build_video_index(fhd, prefix="vid")          # once / on compaction
+    build_video_index(fhd, prefix="vid")               # once / re-build
     probe_video_index(spark, batch_fhd, prefix="vid")  # per batch
     append_to_video_index(novel_fhd, prefix="vid")     # accept novel
+    compact_video_index(spark, prefix="vid")           # periodic heal
 
 Two catalog tables, each bucketed on its probe key:
 
@@ -29,7 +30,8 @@ holds ~24 two-long rows per video; per-batch probe cost is
 |batch frames| bucketed lookups plus a bounded per-candidate aggregate,
 independent of corpus size.
 
-Reference: no counterpart (SURVEY.md §2.8 multimodal tier).
+Reference: no counterpart (SURVEY.md §2.8 multimodal tier). The
+catalog-table mechanics live in plans/index_tables.py.
 """
 
 from __future__ import annotations
@@ -38,8 +40,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import _VID_CONTAIN_DEN, _VID_CONTAIN_NUM
-from .layout import write_bucketed
-from .lsh_index import _clear_orphaned_location, _require_index, _table_n_buckets
+from .index_tables import IndexTables, occupancy
+
+TABLES = IndexTables(vframes="fh", vsizes="doc_id")
+
+
+def _sizes(frames: DataFrame) -> DataFrame:
+    """(doc_id, n): distinct-frame count per video of a distinct frame table."""
+    return frames.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
 
 
 def build_video_index(fhd: DataFrame, *, prefix: str, n_buckets: int = 8) -> None:
@@ -48,18 +56,11 @@ def build_video_index(fhd: DataFrame, *, prefix: str, n_buckets: int = 8) -> Non
     _video_fhd is the canonical producer). Rebuild-in-place is safe:
     saveAsTable(overwrite) swaps atomically and an orphaned location
     from a crashed build is cleared first."""
-    spark = fhd.sparkSession
-    for suffix in ("vframes", "vsizes"):
-        _clear_orphaned_location(spark, f"{prefix}_{suffix}")
+    TABLES.clear_orphans(fhd.sparkSession, prefix)
     d = fhd.select("doc_id", "fh").persist()
     try:
-        write_bucketed(d, f"{prefix}_vframes", bucket_cols=["fh"], n_buckets=n_buckets)
-        write_bucketed(
-            d.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n")),
-            f"{prefix}_vsizes",
-            bucket_cols=["doc_id"],
-            n_buckets=n_buckets,
-        )
+        TABLES.write(d, prefix, "vframes", n_buckets)
+        TABLES.write(_sizes(d), prefix, "vsizes", n_buckets)
     finally:
         d.unpersist()
 
@@ -67,10 +68,8 @@ def build_video_index(fhd: DataFrame, *, prefix: str, n_buckets: int = 8) -> Non
 def append_to_video_index(fhd: DataFrame, *, prefix: str) -> None:
     """ACCEPT a probed batch (whole videos — a video's frames must all
     ride one append, which is what the ingest loop naturally does) into
-    the index. Bucket specs are read FROM the catalog; a missing table
-    fails loudly instead of mode('append') silently creating a parallel
-    index. At-least-once like every index append here, and the probe is
-    built to survive both retry artifacts: a retried append can
+    the index. At-least-once like every index append here, and the
+    probe is built to survive both retry artifacts: a retried append can
     duplicate frame rows (the probe counts shared frames with
     countDistinct, so duplicates cannot inflate ns past the true
     distinct count) and duplicate size rows (the probe max-collapses
@@ -78,20 +77,13 @@ def append_to_video_index(fhd: DataFrame, *, prefix: str) -> None:
     contract). The two writes are NOT atomic: a crash between them
     leaves videos present in vframes with no vsizes row, and the probe
     detects that loudly (raise_error on any candidate missing its size)
-    instead of silently dropping the video from candidacy; rebuild is
-    the heal."""
-    spark = fhd.sparkSession
-    _require_index(spark, prefix, ("vframes", "vsizes"))
+    instead of silently dropping the video from candidacy;
+    compact_video_index is the heal."""
+    TABLES.require(fhd.sparkSession, prefix)
     d = fhd.select("doc_id", "fh").persist()
     try:
-        d.write.mode("append").format("parquet").bucketBy(
-            _table_n_buckets(spark, f"{prefix}_vframes"), "fh"
-        ).saveAsTable(f"{prefix}_vframes")
-        d.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n")).write.mode(
-            "append"
-        ).format("parquet").bucketBy(
-            _table_n_buckets(spark, f"{prefix}_vsizes"), "doc_id"
-        ).saveAsTable(f"{prefix}_vsizes")
+        TABLES.append(d, prefix, "vframes")
+        TABLES.append(_sizes(d), prefix, "vsizes")
     finally:
         d.unpersist()
 
@@ -107,43 +99,20 @@ def compact_video_index(spark: SparkSession, *, prefix: str) -> dict:
     heals the torn state a crash between append's two writes leaves
     (videos in vframes with no vsizes row, which the probe detects
     loudly): after compaction the index is byte-equal to a one-shot
-    rebuild from the same videos, with no corpus access. The frame
-    rewrite goes through the staged swap; the sizes rewrite is a plain
-    overwrite of derived state (a crash mid-write re-heals on the next
-    compact — and the probe's raise catches any candidate gap
-    meanwhile).
+    rebuild from the same videos, with no corpus access. Frames are
+    rewritten before sizes: a crash between the two leaves sizes that
+    the next compaction re-derives.
 
     Also reports the hot-fingerprint scalars — probes cost a
     fingerprint's bucket membership per arriving video, so max_fh_df is
     this index's probe-cost monitor (the persisted twin of the batch
     tier's _VID_FH_MAX_DF valve decision). Returns {rows_before,
     rows_after, n_videos, max_frames, max_fh_df, mean_fh_df}."""
-    from .layout import replace_table_staged
-
-    _require_index(spark, prefix, ("vframes", "vsizes"))
-    frames = f"{prefix}_vframes"
-    n_buckets = _table_n_buckets(spark, frames)
-    rows_before = spark.table(frames).count()
-    replace_table_staged(
-        spark.table(frames).distinct(), frames, bucket_cols=["fh"], n_buckets=n_buckets
-    )
-    sizes_buckets = _table_n_buckets(spark, f"{prefix}_vsizes")
-    spark.table(frames).groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n")
-    ).write.mode("overwrite").format("parquet").bucketBy(
-        sizes_buckets, "doc_id"
-    ).saveAsTable(f"{prefix}_vsizes")
-    stats = (
-        spark.table(frames)
-        .groupBy("fh")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .agg(
-            F.sum("df").alias("rows_after"),
-            F.max("df").alias("max_fh_df"),
-            F.avg("df").alias("mean_fh_df"),
-        )
-        .collect()[0]
-    )
+    TABLES.require(spark, prefix)
+    rows_before = spark.table(f"{prefix}_vframes").count()
+    TABLES.dedup(spark, prefix, "vframes")
+    TABLES.rewrite(_sizes(spark.table(f"{prefix}_vframes")), prefix, "vsizes")
+    stats = occupancy(spark.table(f"{prefix}_vframes"), "fh")
     vstats = (
         spark.table(f"{prefix}_vsizes")
         .agg(F.count(F.lit(1)).alias("n_videos"), F.max("n").alias("max_frames"))
@@ -151,11 +120,11 @@ def compact_video_index(spark: SparkSession, *, prefix: str) -> dict:
     )
     return {
         "rows_before": int(rows_before),
-        "rows_after": int(stats["rows_after"]),
+        "rows_after": int(stats["rows"]),
         "n_videos": int(vstats["n_videos"]),
         "max_frames": int(vstats["max_frames"]),
-        "max_fh_df": int(stats["max_fh_df"]),
-        "mean_fh_df": float(stats["mean_fh_df"]),
+        "max_fh_df": int(stats["max"]),
+        "mean_fh_df": float(stats["mean"]),
     }
 
 
@@ -170,7 +139,7 @@ def probe_video_index(
     the contract test). Only the batch side shuffles: the candidate
     join hits the frame table bucketed on fh.
 
-    Retry/crash hardening (ADVICE r17): shared frames are counted with
+    Retry/crash hardening: shared frames are counted with
     countDistinct and index sizes max-collapsed per video, so an
     at-least-once append's duplicated rows cannot inflate ns (which
     could falsely clear the 7/10 threshold or push best_containment
@@ -180,8 +149,7 @@ def probe_video_index(
     The missing-size guard is an assert_true inside a FILTER, not a
     raised expression in a projection: projection expressions over an
     outer join's null-padded rows are evaluated (or not) depending on
-    the physical join AQE picks — measured both ways on this build —
-    while a filter must evaluate its predicate per row; the left-side
+    the physical join AQE picks, while a filter must evaluate its predicate per row; the left-side
     disjunct keeps EliminateOuterJoin from rewriting the left join to
     inner (which would silently drop the torn rows). Both guards ride
     the existing joins — no extra scan of the index, which is what
@@ -192,7 +160,7 @@ def probe_video_index(
     from ..functions.cachepool import managed_persist
     from ..functions.portable import roundn
 
-    _require_index(spark, prefix, ("vframes", "vsizes"))
+    TABLES.require(spark, prefix)
     inc = managed_persist(fhd.select("doc_id", "fh").distinct())
     pn = inc.groupBy("doc_id").agg(F.count(F.lit(1)).alias("pn"))
     ix = spark.table(f"{prefix}_vframes").select(F.col("doc_id").alias("ix_id"), "fh")

@@ -815,6 +815,7 @@ def q_dedup_index_probe_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from .operators.dedup import INCREMENTAL_STRIDE, docs_normalized
+    from .plans.lsh_index import TABLES as LSH_TABLES
     from .plans.lsh_index import build_lsh_index
     from .streaming import index_probe_stream as IPS
 
@@ -829,16 +830,8 @@ def q_dedup_index_probe_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .json(p),
     )
     ix_prefix = f"probeix_{tag}"
-    # rebuild unless ALL THREE index tables exist (judge round-6 ADVICE
-    # item 1): a crash between build_lsh_index's three writes can leave
-    # digests present with bands/shingles missing — gating on digests
-    # alone would then skip the rebuild forever and fail every probe on
-    # the missing table. saveAsTable(overwrite) makes the partial-state
-    # rebuild safe.
-    if not all(
-        spark.catalog.tableExists(f"`default`.`{ix_prefix}_{s}`")
-        for s in ("digests", "bands", "shingles")
-    ):
+    # rebuild unless ALL index tables exist (a partial build must rebuild)
+    if not LSH_TABLES.exists(spark, ix_prefix):
         build_lsh_index(
             docs_normalized(spark, sf_dir).filter(F.col("doc_id") % INCREMENTAL_STRIDE != 0),
             prefix=ix_prefix,
@@ -1340,7 +1333,7 @@ def q_ann_ivfpq_probe_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .functions.cachepool import managed_persist
     from .operators.similarity import QUERY_STRIDE, _coarse_centroids, _quantized
-    from .plans.pq_index import _TABLES as _PQ_TABLES
+    from .plans.pq_index import TABLES as PQ_TABLES
     from .plans.pq_index import build_pq_index
     from .streaming import ann_probe_stream as APS
 
@@ -1355,12 +1348,8 @@ def q_ann_ivfpq_probe_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .json(p),
     )
     ix_prefix = f"annpqix_{tag}"
-    # rebuild unless ALL FOUR index tables exist (the round-6 partial-
-    # build lesson: gating on one table would skip the rebuild forever
-    # after a crash between writes)
-    if not all(
-        spark.catalog.tableExists(f"`default`.`{ix_prefix}_{s}`") for s in _PQ_TABLES
-    ):
+    # rebuild unless ALL index tables exist (a partial build must rebuild)
+    if not PQ_TABLES.exists(spark, ix_prefix):
         emb = managed_persist(_quantized(spark, sf_dir))
         # the SAME trained quantizer the batch IVF-PQ tiers serve — a
         # store hit when any ann_* query trained it first (bench runs
@@ -1451,6 +1440,7 @@ def q_ingest_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.corpus import bpe_merge_list
     from .operators.curation import PROBE_STRIDE, bloom_trained_state
     from .operators.dedup import INCREMENTAL_STRIDE, docs_normalized
+    from .plans.lsh_index import TABLES as LSH_TABLES
     from .plans.lsh_index import build_lsh_index
     from .streaming import ingest_gate_stream as IGS
 
@@ -1468,10 +1458,7 @@ def q_ingest_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .json(p),
     )
     ix_prefix = f"ingateix_{tag}"
-    if not all(
-        spark.catalog.tableExists(f"`default`.`{ix_prefix}_{s}`")
-        for s in ("digests", "bands", "shingles")
-    ):
+    if not LSH_TABLES.exists(spark, ix_prefix):
         build_lsh_index(
             docs_normalized(spark, sf_dir).filter(
                 F.col("doc_id") % INCREMENTAL_STRIDE != 0

@@ -38,9 +38,9 @@ def _stage_queries(spark, tmp_path, n_files=4):
 
 
 def _ensure_index(spark):
-    from prueba_tecnica_http_client_etl_spark.plans.pq_index import _TABLES
+    from prueba_tecnica_http_client_etl_spark.plans.pq_index import TABLES
 
-    if not all(spark.catalog.tableExists(f"`{PREFIX}_{s}`") for s in _TABLES):
+    if not TABLES.exists(spark, PREFIX):
         build_pq_index(_quantized(spark, SF_SMOKE), prefix=PREFIX, n_buckets=4)
 
 

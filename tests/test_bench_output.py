@@ -77,3 +77,19 @@ def test_final_line_sheds_detail_rather_than_overflow():
     assert len(final) <= bench.FINAL_LINE_BUDGET
     parsed = json.loads(final)
     assert parsed["value"] == round(sum(timings.values()), 3)
+
+
+def test_final_line_sheds_canary_series_as_one_unit():
+    """Over budget, c_t and c_slot are shed together: canary seconds
+    without the slots they fired at cannot be placed in the run."""
+    _, timings, reran = _fake_suite()
+    shed = 0
+    for n in range(1, 200):
+        c_t, c_slot = [12.345] * n, list(range(n))
+        final = bench.build_output_lines(timings, reran, 0.1, 32,
+                                         canary_t=c_t, canary_slot=c_slot)[-1]
+        assert len(final) <= bench.FINAL_LINE_BUDGET
+        parsed = json.loads(final)
+        assert ("c_t" in parsed) == ("c_slot" in parsed), n
+        shed += "c_t" not in parsed
+    assert shed, "no canary length pushed the line over budget"

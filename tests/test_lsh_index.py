@@ -236,49 +236,11 @@ def test_probe_unordered_has_no_global_sort(spark, built_index):
     assert sorted(map(tuple, df_u.collect())) == [tuple(r) for r in df_o.collect()]
 
 
-def test_crashed_swap_self_heals_on_next_probe(spark):
-    """replace_table_staged's one real crash window is between its DROP
-    and RENAME steps: the original table is gone but the stage table
-    holds the complete rewrite. Any index entry point must then heal
-    (rename the stage into place) instead of failing 'build the index
-    first' — and the healed index must probe byte-identically."""
-    from prueba_tecnica_http_client_etl_spark.plans import layout
-
-    base = [(i, f"crash doc {i} " + " ".join(f"c{i}w{j}" for j in range(12))) for i in range(6)]
-    base.append((100, NEAR_A))
-    LI.build_lsh_index(_prepped_rows(spark, base), prefix="t_crash", n_buckets=4)
-    want = [tuple(r) for r in LI.probe_lsh_index(
-        spark, _prepped_rows(spark, PROBE_ROWS), prefix="t_crash").collect()]
-
-    # simulate the crash: stage holds the (deduped) rewrite, original gone
-    tbl = "t_crash_bands"
-    stage = tbl + layout.STAGE_SUFFIX
-    n_buckets = LI._table_n_buckets(spark, tbl)
-    # a previous test-session crash can leave this very stage orphaned on
-    # disk — clear it the way replace_table_staged itself does
-    spark.sql(f"DROP TABLE IF EXISTS `{stage}`")
-    LI._clear_orphaned_location(spark, stage)
-    spark.table(tbl).distinct().write.mode("overwrite").format("parquet").bucketBy(
-        n_buckets, "band_hash"
-    ).saveAsTable(stage)
-    spark.sql(f"DROP TABLE `{tbl}`")
-    assert not spark.catalog.tableExists(f"`{tbl}`")
-
-    got = [tuple(r) for r in LI.probe_lsh_index(
-        spark, _prepped_rows(spark, PROBE_ROWS), prefix="t_crash").collect()]
-    assert got == want
-    # healed: the table is back under its real name, stage consumed
-    assert spark.catalog.tableExists(f"`{tbl}`")
-    assert not spark.catalog.tableExists(f"`{stage}`")
-    # and the healed table still reads bucketed (the rename kept the spec)
-    assert LI._table_n_buckets(spark, tbl) == n_buckets
-
-
 def test_retried_compaction_does_not_grow_tombstones(spark):
     """The tombstone table is REWRITTEN distinct each compaction (old
     union newly-hot), so a retried/repeated compaction cannot append
     the same keys again and grow the broadcast anti-join side without
-    bound (round-12 ADVICE item 5)."""
+    bound."""
     from prueba_tecnica_http_client_etl_spark.functions import textprep as tp
 
     base = [(i, BOILER) for i in range(5)] + [(100, NEAR_A)]

@@ -110,6 +110,8 @@ def test_missing_index_fails_loudly(spark, split_sigs):
         PI.probe_phash_index(spark, arrivals, prefix="t_pidx_nope")
     with pytest.raises(ValueError, match="missing tables"):
         PI.append_to_phash_index(corpus, prefix="t_pidx_nope")
+    with pytest.raises(ValueError, match="missing tables"):
+        PI.compact_phash_index(spark, prefix="t_pidx_nope")
 
 
 def test_compact_reclaims_retry_duplicates(spark, split_sigs):

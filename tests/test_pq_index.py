@@ -232,7 +232,7 @@ def test_torn_append_detected_loudly(spark):
     """Codes written, vecs write crashed: the vectors ADC-rank correctly
     (codes are complete) but any that reach the re-rank fetch must raise
     — never score from a silently-missing refine row."""
-    from prueba_tecnica_http_client_etl_spark.plans.lsh_index import _table_n_buckets
+    from prueba_tecnica_http_client_etl_spark.plans.index_tables import table_n_buckets
 
     emb = _quantized(spark, SF_SMOKE).persist()
     try:
@@ -247,7 +247,7 @@ def test_torn_append_detected_loudly(spark):
             b, spark.table("t_pqtorn_cents"), spark.table("t_pqtorn_codebook")
         )
         rows.write.mode("append").format("parquet").bucketBy(
-            _table_n_buckets(spark, "t_pqtorn_codes"), "cent_id"
+            table_n_buckets(spark, "t_pqtorn_codes"), "cent_id"
         ).saveAsTable("t_pqtorn_codes")
         # ADC-only probes still serve (codes are complete and correct)
         adc = PQI.probe_pq_index(spark, queries, prefix="t_pqtorn", rerank=False)

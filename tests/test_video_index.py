@@ -92,6 +92,8 @@ def test_missing_index_fails_loudly(spark, split_fhd):
         VI.probe_video_index(spark, arrivals, prefix="t_vidx_nope")
     with pytest.raises(ValueError, match="missing tables"):
         VI.append_to_video_index(corpus, prefix="t_vidx_nope")
+    with pytest.raises(ValueError, match="missing tables"):
+        VI.compact_video_index(spark, prefix="t_vidx_nope")
 
 
 def _append_frames_only(spark, fhd, prefix):
@@ -99,10 +101,10 @@ def _append_frames_only(spark, fhd, prefix):
     rows land in vframes with NO matching vsizes write (the exact state
     append_to_video_index leaves behind when it dies between its two
     non-atomic saveAsTable calls)."""
-    from prueba_tecnica_http_client_etl_spark.plans.lsh_index import _table_n_buckets
+    from prueba_tecnica_http_client_etl_spark.plans.index_tables import table_n_buckets
 
     fhd.select("doc_id", "fh").write.mode("append").format("parquet").bucketBy(
-        _table_n_buckets(spark, f"{prefix}_vframes"), "fh"
+        table_n_buckets(spark, f"{prefix}_vframes"), "fh"
     ).saveAsTable(f"{prefix}_vframes")
 
 

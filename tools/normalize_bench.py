@@ -37,7 +37,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 def load(path: str) -> dict:
     final = None
     for line in open(path, errors="replace"):
-        if '"metric"' in line:
+        if '{"metric"' in line:
             final = json.loads(line[line.index('{"metric"'):])
     if final is None:
         raise SystemExit(f"{path}: no bench output line found")
